@@ -1,6 +1,6 @@
 """Writable managed tables for `Connection.sql` DML (reference
 `src/execution/operator/persistent/physical_insert.cpp`,
-`physical_delete.cpp`, `physical_update.cpp`).
+`physical_update.cpp`, `physical_delete.cpp`, `physical_merge_into.cpp`).
 
 Spark-idiomatic storage — a managed table is an *external parquet table*
 registered in the session catalog at an explicit /tmp location:
@@ -8,28 +8,29 @@ registered in the session catalog at an explicit /tmp location:
 - **CREATE TABLE** registers the schema (`spark.catalog.createTable`);
   an empty directory is a valid 0-row table because the schema lives in
   the catalog.
-- **INSERT INTO** passes through to Catalyst's native `InsertIntoTable`
-  over the external parquet source — executor-parallel file appends, no
-  driver-side row handling; this is the 100 TB path.
-- **UPDATE / DELETE** are copy-on-write: survivors (or updated rows) are
-  written to a fresh version directory and the table is re-pointed —
-  Delta/Iceberg semantics without the transaction log (single-writer
-  sessions; MVCC is documented out of scope, SURVEY §2.10). The rewrite
-  is a distributed scan→filter/project→write, never a collect.
-
-The sqllogictest harness keeps its own driver-side row store
-(`sqllogic.SLSession`) because its tables are tiny and its statements run
-thousands of times; this module is the scale path for real users.
+- **INSERT / UPDATE / DELETE / MERGE** each build one *tagged* frame: the
+  table's columns plus `__hit` (the statement changes the row) and
+  `__keep` (the row is in the post-image). `ManagedTables._commit`
+  writes the kept rows — an executor-parallel append for INSERT, a
+  copy-on-write version directory that the table is re-pointed to for
+  the others; Delta/Iceberg semantics without the transaction log
+  (single-writer sessions; MVCC is documented out of scope, SURVEY
+  §2.10) — and counts the hit rows in that same write. With RETURNING it
+  persists the frame once and collects the rows from the hit rows before
+  the write. Nothing else is collected.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from duckdb_spark.operators.dml import HIT, KEEP, merge_into, post_image
 
 _CREATE_RE = re.compile(
     r"(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+"
@@ -161,6 +162,18 @@ def _split_clauses(body: str, keywords: list[str]):
     return out
 
 
+
+def _assignments(body: str) -> dict[str, str]:
+    """`a = expr, "B" = expr` (UPDATE / MERGE SET) → {lowercased column:
+    expression text}."""
+    sets = {}
+    for part in _split_coldefs(body):
+        sm = re.match(r'(?s)^\s*("([^"]+)"|\w+)\s*=\s*(.*)$', part)
+        if not sm:
+            raise ValueError(f"unparseable SET clause {part!r}")
+        sets[(sm.group(2) or sm.group(1)).lower()] = sm.group(3).strip()
+    return sets
+
 def _bind_values_types(src_sql: str, dtypes: list) -> str:
     """Wrap every bare VALUES element in a CAST to its target column type
     so literal-consensus coercion never overrides the table schema."""
@@ -233,12 +246,6 @@ class ManagedTables:
         )
         self.tables[name] = (schema, version)
 
-    def _rewrite(self, name: str, df: DataFrame) -> None:
-        """Copy-on-write: write `df` to the next version dir, re-point."""
-        schema, version = self.tables[name]
-        df.write.mode("overwrite").parquet(self._loc(name, version + 1))
-        self._point(name, schema, version + 1)
-
     def df(self, name: str) -> DataFrame:
         return self.spark.table(name)
 
@@ -247,8 +254,6 @@ class ManagedTables:
     def handle(self, con, query: str):
         """Try to execute `query` as managed-table DDL/DML. Returns
         False when the statement is not ours; a Relation/None when done."""
-        from duckdb_spark.relation import Relation
-
         m = _CREATE_RE.match(query)
         if m and (m.group(4) or "").strip():
             return self._create(con, m)
@@ -261,6 +266,7 @@ class ManagedTables:
                 # (ADVICE r06: returning None here silently no-opped them).
                 return False
             self.spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+            shutil.rmtree(os.path.join(self.base, name), ignore_errors=True)
             del self.tables[name]
             from duckdb_spark.sql.dialect import TIME_TABLE_COLS
 
@@ -287,122 +293,48 @@ class ManagedTables:
         return False
 
     def _merge(self, con, m: re.Match):
-        """MERGE INTO target USING source ON cond WHEN ... — post-image via
-        operators/dml.merge_into's three-branch plan (anti ∪ updated ∪
-        inserts; one shuffle on the join keys), then a copy-on-write
-        rewrite. Reference src/execution/operator/persistent/
-        physical_merge_into.cpp."""
-        from duckdb_spark.sql.dialect import translate
-
+        """MERGE INTO target USING source ON cond WHEN ...: parse the
+        clauses into Columns over the two aliases; operators/dml.merge_into
+        tags the rows with one full outer join."""
         name = _flat(m.group(1))
-        t_alias = m.group(2) or name
-        schema, _ = self.tables[name]
         src_sql = m.group(3).strip()
         s_alias = m.group(4) or "__src"
         if src_sql.startswith("("):
             src = con.sql(src_sql[1:src_sql.rfind(")")]).df()
         else:
             src = self.spark.table(_flat(src_sql))
-        cond = m.group(5)
-        tcols = [f.name for f in schema.fields]
-
-        t = self.spark.table(name).alias(t_alias)
-        s = src.alias(s_alias)
-        on = F.expr(cond)
-        matched = t.join(s, on, "inner")
-        unmatched = t.join(s, on, "left_anti").select(
-            *[F.col(c) for c in tcols])
-        inserts_src = s.join(t, on, "left_anti")
-
-        # First-match-wins per row (reference physical_merge_into.cpp): tag
-        # every matched row with the index of the first WHEN MATCHED clause
-        # whose condition holds (NULL = untouched passthrough), then derive
-        # each clause's output AND the affected-row count from the tagged
-        # frame — one join execution, no per-clause re-joins (ADVICE r06).
-        matched_clauses = []  # (wcond | None, action)
-        insert_clause = None
+        tcols = [f.name for f in self.tables[name][0].fields]
+        matched, insert = [], None
         for w in _WHEN_RE.finditer(m.group(6)):
-            is_not, wcond, action = bool(w.group(1)), w.group(2), w.group(3)
+            is_not, action = bool(w.group(1)), w.group(3).strip()
+            cond = F.expr(w.group(2)) if w.group(2) else None
+            if not is_not and action.upper() == "DELETE":
+                matched.append((cond, None))
+                continue
             if not is_not:
-                matched_clauses.append((wcond, action))
-            else:
-                insert_clause = (wcond, action)
-
-        matched_out = None
-        n_matched = 0
-        if matched_clauses:
-            tag = None
-            for i, (wcond, _) in enumerate(matched_clauses):
-                cond = (F.coalesce(F.expr(wcond), F.lit(False)) if wcond
-                        else F.lit(True))
-                tag = F.when(cond, F.lit(i)) if tag is None \
-                    else tag.when(cond, F.lit(i))
-            tagged = matched.withColumn("__clause", tag).persist()
-            n_matched = tagged.filter(F.col("__clause").isNotNull()).count()
-            branches = [tagged.filter(F.col("__clause").isNull()).select(
-                *[F.col(f"{t_alias}.{c}").alias(c) for c in tcols])]
-            for i, (_, action) in enumerate(matched_clauses):
-                rows = tagged.filter(F.col("__clause") == i)
-                if re.match(r"(?is)^DELETE$", action.strip()):
-                    continue  # consumed: emit nothing
-                sets = {}
-                body = re.sub(r"(?is)^UPDATE\s+SET\s+", "", action.strip())
-                for part in _split_coldefs(body):
-                    sm = re.match(r'(?s)^\s*("([^"]+)"|\w+)\s*=\s*(.*)$',
-                                  part)
-                    sets[(sm.group(2) or sm.group(1)).lower()] = \
-                        sm.group(3).strip()
-                branches.append(rows.select(*[
-                    (F.expr(sets[c.lower()]) if c.lower() in sets
-                     else F.col(f"{t_alias}.{c}")).cast(
-                         dict(t.dtypes)[c]).alias(c)
-                    for c in tcols
-                ]))
-            matched_out = branches[0]
-            for b in branches[1:]:
-                matched_out = matched_out.unionByName(b)
-
-        insert_out = None
-        if insert_clause is not None:
-            wcond, action = insert_clause
-            src_rows = (inserts_src.filter(F.coalesce(
-                F.expr(wcond), F.lit(False))) if wcond else inserts_src)
-            act = action.strip() if action else "INSERT *"
+                sets = _assignments(
+                    re.sub(r"(?is)^UPDATE\s+SET\s+", "", action))
+                matched.append((cond, {c: F.expr(sets[c.lower()])
+                                       for c in tcols if c.lower() in sets}))
+                continue
             vm = re.match(
                 r"(?is)^INSERT\s*(?:\(([^)]*)\))?\s*VALUES\s*\((.+)\)$",
-                act)
-            if vm:
+                action)
+            if vm:  # INSERT [(cols)] VALUES (...): unlisted columns NULL
                 cols = ([c.strip().strip('"') for c in
-                         vm.group(1).split(",")] if vm.group(1)
-                        else tcols)
-                vals = _split_coldefs(vm.group(2))
-                vmap = dict(zip([c.lower() for c in cols], vals))
-                insert_out = src_rows.select(*[
-                    (F.expr(vmap[c.lower()]) if c.lower() in vmap
-                     else F.lit(None)).cast(dict(t.dtypes)[c]).alias(c)
-                    for c in tcols
-                ])
-            else:  # INSERT *
-                insert_out = src_rows.select(*[
-                    (F.col(c) if c in src_rows.columns
-                     else F.lit(None)).cast(dict(t.dtypes)[c]).alias(c)
-                    for c in tcols
-                ])
-        if matched_out is None:
-            matched_out = matched.select(
-                *[F.col(f"{t_alias}.{c}").alias(c) for c in tcols])
-        out = unmatched.unionByName(matched_out)
-        n_affected = n_matched
-        if insert_out is not None:
-            insert_out = insert_out.persist()
-            n_affected += insert_out.count()
-            out = out.unionByName(insert_out)
-        self._rewrite(name, out)
-        if insert_out is not None:
-            insert_out.unpersist()
-        if matched_clauses:
-            tagged.unpersist()
-        return self._count(n_affected)
+                         vm.group(1).split(",")] if vm.group(1) else tcols)
+                vmap = {c.lower(): v for c, v in
+                        zip(cols, _split_coldefs(vm.group(2)))}
+                values = {c: F.expr(vmap[c.lower()]) if c.lower() in vmap
+                          else F.lit(None) for c in tcols}
+            else:  # INSERT [*]: source columns by name
+                values = {c: F.col(f"{s_alias}.`{c}`") if c in src.columns
+                          else F.lit(None) for c in tcols}
+            insert = (cond, values)
+        tagged = merge_into(
+            self.spark.table(name).alias(m.group(2) or name),
+            src.alias(s_alias), F.expr(m.group(5)), matched, insert)
+        return self._commit(con, name, tagged)
 
     def _create(self, con, m: re.Match):
         replace, if_not_exists = bool(m.group(1)), bool(m.group(2))
@@ -480,12 +412,13 @@ class ManagedTables:
             ENUM_TABLE_COLS[name.lower()] = enum_cols
         else:
             ENUM_TABLE_COLS.pop(name.lower(), None)
+        # a new table starts empty, not with the files of a dropped or
+        # replaced one of the same name
+        shutil.rmtree(os.path.join(self.base, name), ignore_errors=True)
         self._point(name, T.StructType(fields), 0)
         return None
 
     def _insert(self, con, m: re.Match):
-        from duckdb_spark.relation import Relation
-
         name = _flat(m.group(1))
         schema, _ = self.tables[name]
         cols = (
@@ -569,105 +502,76 @@ class ManagedTables:
         aligned = src.select(*[
             _bind(f).alias(f.name) for f in schema.fields
         ])
-        # Materialize the count (and RETURNING rows) BEFORE the append:
-        # `aligned` is a lazy plan that may read the target table itself
-        # (INSERT INTO t SELECT ... FROM t), so evaluating it after the
-        # write would re-scan the newly appended files (ADVICE r06).
-        aligned = aligned.persist()
-        n = aligned.count()
-        ret_rows = ret_schema = None
-        if ret:
-            from duckdb_spark.sql.dialect import translate
-
-            aligned.createOrReplaceTempView("__managed_returning")
-            r = self.spark.sql(translate(
-                f"SELECT {ret} FROM __managed_returning"))
-            ret_rows, ret_schema = r.collect(), r.schema
-        # Native executor-parallel file append — never a collect.
-        aligned.write.mode("append").insertInto(name)
-        aligned.unpersist()
-        self.spark.catalog.refreshTable(name)
-        if ret:
-            return Relation(self.spark.createDataFrame(ret_rows, ret_schema))
-        return self._count(n)
+        return self._commit(
+            con, name, aligned.withColumns({HIT: F.lit(True), KEEP: F.lit(True)}),
+            ret, append=True)
 
     def _delete(self, con, m: re.Match):
-        from duckdb_spark.relation import Relation
-        from duckdb_spark.sql.dialect import translate
-
-        name = _flat(m.group(1))
-        src = f"{name} AS {m.group(2)}" if m.group(2) else name
+        name, alias = _flat(m.group(1)), m.group(2)
         cl = _split_clauses(m.group(3) or "", ["WHERE", "RETURNING"])
-        where, ret = cl.get("WHERE"), cl.get("RETURNING")
-        before = self.spark.table(name).count()
-        if where:
-            # route through con.sql: a correlated subquery in the WHERE
-            # needs the decorrelation retries (test_delete_subquery.test)
-            keep = con.sql(
-                f"SELECT * FROM {src} "
-                f"WHERE NOT COALESCE(({where}), FALSE)").df()
-            removed = None
-            if ret:
-                removed = con.sql(
-                    f"SELECT {ret} FROM {src} "
-                    f"WHERE COALESCE(({where}), FALSE)").df().collect()
-            self._rewrite(name, keep)
-            after = self.spark.table(name).count()
-            if ret:
-                return Relation(self.spark.createDataFrame(
-                    removed, self.spark.sql(translate(
-                        f"SELECT {ret} FROM {src}")).schema))
-            return self._count(before - after)
-        schema, version = self.tables[name]
-        self._point(name, schema, version + 1)
-        return self._count(before)
+        # con.sql: a correlated subquery in the WHERE needs the
+        # decorrelation retries (test_delete_subquery.test)
+        tagged = con.sql(
+            f"SELECT *, COALESCE(({cl.get('WHERE') or 'TRUE'}), FALSE) "
+            f"AS {HIT} FROM {name} {alias or ''}").df()
+        return self._commit(con, name, tagged.withColumn(KEEP, ~F.col(HIT)),
+                            cl.get("RETURNING"), alias)
 
     def _update(self, con, m: re.Match):
-        from duckdb_spark.relation import Relation
-        from duckdb_spark.sql.dialect import translate
-
-        name = _flat(m.group(1))
-        src = f"{name} AS {m.group(2)}" if m.group(2) else name
+        name, alias = _flat(m.group(1)), m.group(2)
         schema, _ = self.tables[name]
         cl = _split_clauses(m.group(3), ["WHERE", "RETURNING"])
-        set_body, where, ret = cl["__head"], cl.get("WHERE"), cl.get("RETURNING")
-        sets = {}
-        for part in _split_coldefs(set_body):
-            sm = re.match(r'(?s)^\s*("([^"]+)"|\w+)\s*=\s*(.*)$', part)
-            if not sm:
-                raise ValueError(f"unparseable SET clause {part!r}")
-            sets[(sm.group(2) or sm.group(1)).lower()] = sm.group(3).strip()
-        cond = where or "TRUE"
+        sets = _assignments(cl["__head"])
+        hit = f"COALESCE(({cl.get('WHERE') or 'TRUE'}), FALSE)"
         proj = ", ".join(
-            f"CASE WHEN COALESCE(({cond}), FALSE) THEN ({sets[f.name.lower()]}) "
+            f"CASE WHEN {hit} THEN ({sets[f.name.lower()]}) "
             f"ELSE `{f.name}` END AS `{f.name}`"
             if f.name.lower() in sets else f"`{f.name}`"
             for f in schema.fields
         )
         # con.sql: correlated subqueries in SET/WHERE take the
         # decorrelation retries (test_update_subquery.test)
-        updated = con.sql(f"SELECT {proj} FROM {src}").df()
-        n = con.sql(
-            f"SELECT COUNT(*) FROM {src} "
-            f"WHERE COALESCE(({cond}), FALSE)").df().collect()[0][0]
-        ret_rows = None
-        if ret:
-            ret_rows = con.sql(
-                f"SELECT {ret} FROM (SELECT {proj} FROM {src} "
-                f"WHERE COALESCE(({cond}), FALSE))").df().collect()
-        self._rewrite(name, updated.select(*[f.name for f in schema.fields])
-                      .selectExpr(*[
-                          f"CAST(`{f.name}` AS {f.dataType.simpleString()}) "
-                          f"AS `{f.name}`" for f in schema.fields]))
-        if ret:
-            from duckdb_spark.relation import Relation as R
+        tagged = con.sql(
+            f"SELECT {proj}, {hit} AS {HIT} FROM {name} {alias or ''}").df()
+        return self._commit(con, name, tagged.select(
+            *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
+              for f in schema.fields],
+            HIT, F.lit(True).alias(KEEP)), cl.get("RETURNING"), alias)
 
-            return R(self.spark.createDataFrame(
-                ret_rows, self.spark.sql(translate(
-                    f"SELECT {ret} FROM {name} WHERE 1=0")).schema))
-        return self._count(n)
+    def _commit(self, con, name: str, tagged: DataFrame, ret: str | None = None,
+                alias: str | None = None, append: bool = False):
+        """End of every DML statement. `tagged` holds the table's columns
+        plus HIT and KEEP (operators/dml.py); the kept rows are written as
+        an append for INSERT, as a new version for the rest. The affected
+        count is observed on the hit rows by the write itself. RETURNING
+        rows are collected from the hit rows of the persisted frame before
+        the write, so that they are the rows stored, and so that a plan
+        reading the table it changes (INSERT INTO t SELECT … FROM t) sees
+        it unchanged."""
+        from pyspark.sql import Observation
 
-    def _count(self, n: int):
         from duckdb_spark.relation import Relation
 
-        return Relation(self.spark.createDataFrame([(n,)], "Count: bigint"))
+        if ret:
+            tagged = tagged.persist()
+            tagged.filter(F.col(HIT)).drop(HIT, KEEP) \
+                .createOrReplaceTempView("__managed_returning")
+            r = con.sql(f"SELECT {ret} FROM __managed_returning "
+                        f"AS {alias or name}").df()
+            out = Relation(self.spark.createDataFrame(r.collect(), r.schema))
+        else:
+            hits = Observation()
+            tagged = tagged.observe(hits, F.count_if(F.col(HIT)).alias("n"))
+        if append:
+            post_image(tagged).write.mode("append").insertInto(name)
+            self.spark.catalog.refreshTable(name)
+        else:  # copy-on-write: the next version directory, re-pointed
+            schema, version = self.tables[name]
+            post_image(tagged).write.mode("overwrite").parquet(
+                self._loc(name, version + 1))
+            self._point(name, schema, version + 1)
+        if ret:
+            tagged.unpersist()
+            return out
+        return Relation(self.spark.createDataFrame([(hits.get["n"],)],
+                                                   "Count: bigint"))

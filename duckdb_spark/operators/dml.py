@@ -1,116 +1,121 @@
-"""DML over immutable storage: MERGE / UPDATE / DELETE as rewrite plans.
+"""DML over immutable storage: UPDATE / DELETE / MERGE as rewrite plans.
 
 Reference surface (SURVEY.md §2.1): `physical_insert.cpp`,
 `physical_delete.cpp`, `physical_update.cpp`, `physical_merge_into.cpp`
 with RETURNING. DuckDB mutates row groups under MVCC; Spark's idiomatic
 equivalent over parquet is the *rewrite pattern* (the same shape Delta/
 Iceberg implement under the hood): compute the post-image DataFrame, write
-it atomically (overwrite), optionally emitting the changed-rows DataFrame
-(≈ RETURNING).
+it atomically (overwrite), and take RETURNING from the changed rows.
 
-These operators return the post-image lazily — callers decide whether to
-`copy_to` it (full rewrite) or partition-overwrite. At 100 TB you'd pair
-this with partition pruning: `merge_into(..., partition_filter=...)` keeps
-the rewrite scoped to touched partitions.
+Each operator returns a *tagged* frame: the table's columns plus `__hit`
+(the statement updated, deleted or inserted the row; RETURNING reads these
+rows) and `__keep` (the row is in the post-image, which `post_image`
+selects). `managed.ManagedTables` commits the same tagged frame for every
+SQL DML statement. All operators are lazy — callers decide whether to
+`copy_to` the post-image (full rewrite) or partition-overwrite.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def delete_where(table: DataFrame, cond: Column) -> tuple[DataFrame, DataFrame]:
-    """DELETE ... WHERE cond → (post_image, deleted_rows ≈ RETURNING)."""
-    return table.filter(~cond | cond.isNull()), table.filter(cond)
+HIT, KEEP = "__hit", "__keep"
 
 
-def update_where(
-    table: DataFrame, cond: Column, assignments: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """UPDATE ... SET col=expr WHERE cond → (post_image, updated_rows).
+def post_image(tagged: DataFrame) -> DataFrame:
+    """The rows a tagged DML frame keeps, without the flags."""
+    return tagged.filter(F.col(KEEP)).drop(HIT, KEEP)
+
+
+def delete_where(table: DataFrame, cond: Column) -> DataFrame:
+    """DELETE ... WHERE cond → tagged frame: the rows cond holds for are hit
+    and dropped."""
+    hit = F.coalesce(cond, F.lit(False))
+    return table.select("*", hit.alias(HIT), (~hit).alias(KEEP))
+
+
+def update_where(table: DataFrame, cond: Column, assignments: dict[str, Column]) -> DataFrame:
+    """UPDATE ... SET col=expr WHERE cond → tagged frame.
 
     RETURNING semantics (reference physical_update.cpp): rows are matched on
     their PRE-update values and their POST-update values are returned — so
     the WHERE flag is computed on the pre-image before assignments apply
     (SET bal=0 WHERE bal<0 must return the zeroed rows, not an empty set).
     """
-    flagged = table.withColumn("__hit", F.coalesce(cond, F.lit(False)))
-    post_flagged = flagged.select(
-        "__hit",
+    flagged = table.withColumn(HIT, F.coalesce(cond, F.lit(False)))
+    return flagged.select(
         *[
             (
-                F.when(F.col("__hit"), assignments[c]).otherwise(F.col(c))
+                F.when(F.col(HIT), assignments[c]).otherwise(F.col(c))
                 if c in assignments
                 else F.col(c)
             ).alias(c)
             for c in table.columns
         ],
+        HIT,
+        F.lit(True).alias(KEEP),
     )
-    post = post_flagged.drop("__hit")
-    updated = post_flagged.filter(F.col("__hit")).drop("__hit")
-    return post, updated
 
 
 def merge_into(
     target: DataFrame,
     source: DataFrame,
-    on: list[str],
-    when_matched_update: dict[str, Column] | None = None,
-    when_matched_delete: Column | None = None,
-    when_not_matched_insert: bool = True,
-    insert_values: dict[str, Column] | None = None,
+    on: Column | list[str],
+    matched: list[tuple[Column | None, dict[str, Column] | None]] = (),
+    insert: tuple[Column | None, dict[str, Column]] | None = None,
 ) -> DataFrame:
-    """MERGE INTO target USING source ON keys — post-image DataFrame.
+    """MERGE INTO target USING source ON ... → tagged frame (see module).
 
-    Plan shape (one shuffle on the join keys, AQE-sized):
-      matched    = target ⋈ source (inner)  → update/delete branches
-      unmatched  = target ⟕̸ source (anti)  → kept as-is
-      inserts    = source ⟕̸ target (anti)  → appended when requested
+    `on` is a join condition or a list of key columns named alike on both
+    sides. `matched` holds the WHEN MATCHED clauses in order as
+    (condition or None, {column: value} for UPDATE SET or None for
+    DELETE); the first clause whose condition holds takes the row
+    (reference physical_merge_into.cpp), and a matched row no clause takes
+    stays as it is. `insert` is WHEN NOT MATCHED [AND condition] THEN
+    INSERT: a target column missing from its values takes the same-named
+    source column, else NULL. Values are cast to the target's types.
+
+    One full outer join tags every row: target-only rows are kept,
+    source-only rows are inserted or dropped.
     """
-    tcols = target.columns
-    t = target.alias("t")
-    s = source.alias("s")
+    t = target.withColumn("__t", F.lit(True))
+    s = source.withColumn("__s", F.lit(True))
+    if isinstance(on, list):
+        on = reduce(lambda a, b: a & b, [t[k] == s[k] for k in on])
+    is_matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
+    clause = None  # index of the WHEN MATCHED clause that takes the row
+    for i, (cond, _) in enumerate(matched):
+        hit = is_matched if cond is None else is_matched & F.coalesce(cond, F.lit(False))
+        clause = F.when(hit, i) if clause is None else clause.when(hit, i)
+    joined = t.join(s, on, "full_outer").withColumn(
+        "__clause", F.lit(None).cast("int") if clause is None else clause)
 
-    unmatched = t.join(s, on, "left_anti").select(*[F.col(c) for c in tcols])
-
-    matched = t.join(s, on, "inner")
-    if when_matched_delete is not None:
-        matched = matched.filter(~when_matched_delete | when_matched_delete.isNull())
-    if when_matched_update:
-        matched_out = matched.select(
-            *[
-                (when_matched_update[c] if c in when_matched_update else F.col(f"t.{c}")).alias(c)
-                for c in tcols
-            ]
-        )
+    new_row = F.col("__t").isNull()
+    if insert is None:
+        inserted, ins_values = F.lit(False), {}
     else:
-        matched_out = matched.select(*[F.col(f"t.{c}").alias(c) for c in tcols])
+        ins_cond, ins_values = insert
+        inserted = new_row if ins_cond is None else new_row & F.coalesce(ins_cond, F.lit(False))
+    deletes = [i for i, (_, sets) in enumerate(matched) if sets is None]
+    deleted = F.col("__clause").isin(deletes) if deletes else F.lit(False)
 
-    out = unmatched.unionByName(matched_out)
-    if when_not_matched_insert:
-        inserts = s.join(t, on, "left_anti")
-        # align to target schema: explicit insert_values mapping wins, then
-        # same-name source columns, else NULL
-        iv = insert_values or {}
-        inserts = inserts.select(
-            *[
-                (
-                    iv[c] if c in iv else (F.col(c) if c in inserts.columns else F.lit(None))
-                ).cast(dict(target.dtypes)[c]).alias(c)
-                for c in tcols
-            ]
-        )
-        out = out.unionByName(inserts)
-    return out
+    def value(c: str, dtype: str) -> Column:
+        out = None
+        if insert is not None:
+            v = (ins_values[c] if c in ins_values
+                 else s[c] if c in source.columns else F.lit(None))
+            out = F.when(new_row, v)
+        for i, (_, sets) in enumerate(matched):
+            if sets and c in sets:
+                hit = F.col("__clause") == i
+                out = F.when(hit, sets[c]) if out is None else out.when(hit, sets[c])
+        return (t[c] if out is None else out.otherwise(t[c])).cast(dtype).alias(c)
 
-
-def insert_returning(table: DataFrame, rows: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """INSERT ... RETURNING * → (post_image, inserted_rows)."""
-    aligned = rows.select(
-        *[
-            (F.col(c) if c in rows.columns else F.lit(None)).cast(dict(table.dtypes)[c]).alias(c)
-            for c in table.columns
-        ]
+    return joined.select(
+        *[value(c, dtype) for c, dtype in target.dtypes],
+        (inserted | F.col("__clause").isNotNull()).alias(HIT),
+        F.when(new_row, inserted).otherwise(~F.coalesce(deleted, F.lit(False))).alias(KEEP),
     )
-    return table.unionByName(aligned), aligned

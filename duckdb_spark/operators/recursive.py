@@ -39,7 +39,9 @@ def recursive_cte(
     for _ in range(max_iterations):
         nxt = step(working)
         if distinct:
-            nxt = nxt.exceptAll(acc).distinct()
+            # EXCEPT DISTINCT: a row the step re-emits twice is dropped
+            # whole if acc holds it (exceptAll would remove one copy only)
+            nxt = nxt.subtract(acc)
         nxt = nxt.localCheckpoint(eager=True)
         if nxt.isEmpty():
             return acc

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_spark.catalog import load_table
-from duckdb_spark.operators.dml import delete_where, merge_into, update_where
+from duckdb_spark.operators.dml import delete_where, merge_into, post_image, update_where
 from duckdb_spark.operators.misc import hash_sample, sample_percent
 from duckdb_spark.operators.pivot import dynamic_pivot, unpivot
 from duckdb_spark.functions import aggregates as A
@@ -42,7 +42,7 @@ ORDER BY o_orderkey
 def dml_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO (reference physical_merge_into.cpp): matched rows get
     totals replaced by lineitem revenue + status 'U'; unmatched source
-    rows insert with status 'I'. One shuffle on the key."""
+    rows insert with status 'I'. One full outer join on the key."""
     orders, lineitem = (load_table(spark, sf_dir, t) for t in ("orders", "lineitem"))
     target = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("total"), "o_orderstatus"
@@ -52,14 +52,13 @@ def dml_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_orderkey").alias("o_orderkey"))
         .agg(A.money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
-    merged = merge_into(
+    merged = post_image(merge_into(
         target,
         source,
         on=["o_orderkey"],
-        when_matched_update={"total": F.col("s.revenue"), "o_orderstatus": F.lit("U")},
-        when_not_matched_insert=True,
-        insert_values={"total": F.col("revenue"), "o_orderstatus": F.lit("I")},
-    )
+        matched=[(None, {"total": F.col("revenue"), "o_orderstatus": F.lit("U")})],
+        insert=(None, {"total": F.col("revenue"), "o_orderstatus": F.lit("I")}),
+    ))
     return merged.orderBy("o_orderkey")
 
 
@@ -81,13 +80,12 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.round("c_acctbal", 2).alias("bal")
     )
-    updated, changed = update_where(
+    updated = post_image(update_where(
         customer.withColumn("was_updated", F.when(F.col("bal") < 0, 1).otherwise(0)),
         F.col("bal") < 0,
         {"bal": F.lit(0.0)},
-    )
-    post, _deleted = delete_where(updated, F.col("bal") < 1000)
-    return post.orderBy("c_custkey")
+    ))
+    return post_image(delete_where(updated, F.col("bal") < 1000)).orderBy("c_custkey")
 
 
 @register(
@@ -132,25 +130,23 @@ def dml_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_orderkey").alias("o_orderkey"))
         .agg(A.money_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
     )
-    merged = merge_into(
+    merged = post_image(merge_into(
         target,
         source,
         on=["o_orderkey"],
-        when_matched_update={"total": F.col("s.revenue"), "o_orderstatus": F.lit("U")},
-        when_not_matched_insert=True,
-        insert_values={"total": F.col("revenue"), "o_orderstatus": F.lit("I")},
-    ).select(
+        matched=[(None, {"total": F.col("revenue"), "o_orderstatus": F.lit("U")})],
+        insert=(None, {"total": F.col("revenue"), "o_orderstatus": F.lit("I")}),
+    )).select(
         F.lit("m").alias("tag"), F.col("o_orderkey").alias("k"),
         F.col("total").alias("v"), F.col("o_orderstatus").alias("s"),
     )
     cust = customer.select("c_custkey", F.round("c_acctbal", 2).alias("bal"))
-    updated, _changed = update_where(
+    updated = post_image(update_where(
         cust.withColumn("was_updated", F.when(F.col("bal") < 0, 1).otherwise(0)),
         F.col("bal") < 0,
         {"bal": F.lit(0.0)},
-    )
-    post, _deleted = delete_where(updated, F.col("bal") < 1000)
-    ud = post.select(
+    ))
+    ud = post_image(delete_where(updated, F.col("bal") < 1000)).select(
         F.lit("u").alias("tag"), F.col("c_custkey").alias("k"),
         F.col("bal").alias("v"), F.col("was_updated").cast("string").alias("s"),
     )

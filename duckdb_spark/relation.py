@@ -995,8 +995,10 @@ class Connection:
                 df = self.spark.sql(translate(
                     f"SELECT * FROM __union_by_name {tail}"))
             return Relation(df)
+        translated = None
         try:
-            return Relation(self.spark.sql(translate(query)))
+            translated = translate(query)
+            return Relation(self.spark.sql(translated))
         except Exception as e:
             # `s['field']` subscripts are type-ambiguous at translate time
             # (map key vs struct field); retry the struct reading when the
@@ -1012,7 +1014,7 @@ class Connection:
                     retried = translate(query)
                 finally:
                     set_session_setting("__struct_subscript", "")
-                if retried != translate(query):
+                if retried != translated:
                     # fall through to the remaining handlers if the struct
                     # reading doesn't analyze either
                     try:
@@ -1034,7 +1036,6 @@ class Connection:
                 from duckdb_spark.sql.dialect import set_session_setting
                 from duckdb_spark.sql.textcast import (
                     RUNTIME_CASTS,
-                    render_duck,
                     runtime_cast_fn,
                 )
                 from duckdb_spark.types import duckdb_type_to_spark
@@ -1044,15 +1045,7 @@ class Connection:
                     retried = translate(query)
                 finally:
                     set_session_setting("__text_cast_runtime", "")
-                done = getattr(self, "_rtcast_registered", None)
-                if done is None:
-                    done = self._rtcast_registered = set()
-                if "__dkrender" not in done:
-                    self.spark.udf.register(
-                        "__dkrender",
-                        lambda v: None if v is None else render_duck(v),
-                        "string")
-                    done.add("__dkrender")
+                done = self._rtcast_registered
                 for name, (ducktype, is_try) in list(RUNTIME_CASTS.items()):
                     if name in done:
                         continue

@@ -87,6 +87,19 @@ def test_truncate(con):
     con.sql("DROP TABLE mt1")
 
 
+def test_create_after_drop_or_replace_starts_empty(con):
+    con.sql("DROP TABLE IF EXISTS cd_t")
+    con.sql("CREATE TABLE cd_t (x INTEGER)")
+    con.sql("INSERT INTO cd_t VALUES (1), (2)")
+    con.sql("DROP TABLE cd_t")
+    con.sql("CREATE TABLE cd_t (x INTEGER)")
+    assert con.sql("SELECT COUNT(*) AS n FROM cd_t").df().collect()[0].n == 0
+    con.sql("INSERT INTO cd_t VALUES (3)")
+    con.sql("CREATE OR REPLACE TABLE cd_t (x INTEGER)")
+    assert con.sql("SELECT COUNT(*) AS n FROM cd_t").df().collect()[0].n == 0
+    con.sql("DROP TABLE cd_t")
+
+
 def test_create_duplicate_raises(con):
     con.sql("DROP TABLE IF EXISTS mt3")
     con.sql("CREATE TABLE mt3 (x INTEGER)")
@@ -194,3 +207,103 @@ def test_keywords_inside_string_literals(con):
                 "RETURNING a").df().collect()
     assert [x.a for x in r] == [1]
     con.sql("DROP TABLE kw_t")
+
+
+# -- statements checked against DuckDB on the same tables -------------------
+
+_MIRROR_SETUP = [
+    "CREATE TABLE {t} (k INTEGER, v VARCHAR, n DOUBLE)",
+    "INSERT INTO {t} VALUES (1, 'a', 1.5), (2, 'b', NULL), (3, 'c', 3.0), "
+    "(4, NULL, 4.5), (5, 'e', 5.0)",
+    "CREATE TABLE {s} (k INTEGER, w INTEGER)",
+    "INSERT INTO {s} VALUES (2, 20), (3, 30), (9, 90)",
+]
+
+
+def _sorted_rows(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+@pytest.fixture
+def both(con, request):
+    """Run each statement on a managed table and on DuckDB; assert that the
+    returned rows (a count or RETURNING rows) and then the table agree.
+    `{t}` and `{s}` in a statement name a target and a source table of
+    this test's own."""
+    import duckdb
+
+    names = {"t": f"{request.node.name[5:]}_t", "s": f"{request.node.name[5:]}_s"}
+    duck = duckdb.connect()
+    for stmt in _MIRROR_SETUP:
+        con.sql(stmt.format(**names))
+        duck.execute(stmt.format(**names))
+
+    def run(sql):
+        sql = sql.format(**names)
+        got = _sorted_rows(con.sql(sql).df().collect())
+        want = _sorted_rows(duck.execute(sql).fetchall())
+        assert got == want, sql
+        table = "SELECT * FROM {t}".format(**names)
+        assert _sorted_rows(con.sql(table).df().collect()) == \
+            _sorted_rows(duck.execute(table).fetchall()), sql
+        return got
+
+    yield run
+    for name in names.values():
+        con.sql(f"DROP TABLE {name}")
+    duck.close()
+
+
+def test_update_delete_returning_match_duckdb(both):
+    assert both("UPDATE {t} SET v = v || '!', n = n * 2 WHERE k >= 3 "
+                "RETURNING k, v, n") == [(3, "c!", 6.0), (4, None, 9.0),
+                                         (5, "e!", 10.0)]
+    assert both("DELETE FROM {t} WHERE n > 8 RETURNING *") == [
+        (4, None, 9.0), (5, "e!", 10.0)]
+    assert both("UPDATE {t} SET n = 0 WHERE k = 99 RETURNING k") == []
+
+
+def test_correlated_in_and_exists_where(both):
+    assert both("UPDATE {t} AS x SET n = 0 WHERE x.k IN "
+                "(SELECT k FROM {s} WHERE {s}.w > x.k * 10 - 1)") == [(2,)]
+    assert both("DELETE FROM {t} WHERE EXISTS (SELECT 1 FROM {s} "
+                "WHERE {s}.k = {t}.k AND {s}.w > 25)") == [(1,)]
+    assert both("DELETE FROM {t} WHERE k NOT IN (SELECT k FROM {s}) AND "
+                "EXISTS (SELECT 1 FROM {s} WHERE {s}.w > {t}.k * 20)") == [(2,)]
+
+
+def test_aliased_delete_returning(both):
+    assert both("DELETE FROM {t} AS x WHERE EXISTS "
+                "(SELECT 1 FROM {s} WHERE {s}.k = x.k) RETURNING x.k") == [(2,), (3,)]
+
+
+def test_delete_without_where_counts_rows(both):
+    assert both("DELETE FROM {t}") == [(5,)]
+    assert both("DELETE FROM {t}") == [(0,)]
+
+
+def test_merge_conditional_insert_and_insert_star(con):
+    """DuckDB 1.0 has no MERGE: the expected tables are written out."""
+    for s in ["DROP TABLE IF EXISTS mi_t", "DROP TABLE IF EXISTS mi_s",
+              "CREATE TABLE mi_t (k INTEGER, v VARCHAR)",
+              "INSERT INTO mi_t VALUES (1, 'a'), (2, 'b')",
+              "CREATE TABLE mi_s AS SELECT * FROM "
+              "(VALUES (2, 'B'), (3, 'C'), (4, 'D'), (5, 'E')) AS t(k, v)"]:
+        con.sql(s)
+    r = con.sql(
+        "MERGE INTO mi_t USING mi_s s ON mi_t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED AND s.k % 2 = 1 THEN INSERT VALUES (s.k, lower(s.v))"
+    ).df().collect()
+    assert r[0].Count == 3  # k=2 updated, k=3 and k=5 inserted
+    assert _sorted_rows(con.sql("SELECT * FROM mi_t").df().collect()) == [
+        (1, "a"), (2, "B"), (3, "c"), (5, "e")]
+    r = con.sql(
+        "MERGE INTO mi_t USING mi_s s ON mi_t.k = s.k "
+        "WHEN NOT MATCHED THEN INSERT *"
+    ).df().collect()
+    assert r[0].Count == 1  # k=4
+    assert _sorted_rows(con.sql("SELECT * FROM mi_t").df().collect()) == [
+        (1, "a"), (2, "B"), (3, "c"), (4, "D"), (5, "e")]
+    con.sql("DROP TABLE mi_t")
+    con.sql("DROP TABLE mi_s")

@@ -111,6 +111,19 @@ def test_recursive_cte_cycle_terminates(spark):
     assert sorted(r["node"] for r in out.collect()) == [0, 1]
 
 
+def test_recursive_cte_distinct_drops_repeated_accumulated_rows(spark):
+    # the step emits each row twice (1 -> 2, 2 -> 1): UNION keeps one copy,
+    # even of a row the accumulated set already holds
+    base = spark.createDataFrame([(1,)], "n long")
+
+    def step(w):
+        nxt = w.select(F.when(F.col("n") < 2, F.col("n") + 1).otherwise(1).alias("n"))
+        return nxt.unionByName(nxt)
+
+    out = recursive_cte(base, step, distinct=True)
+    assert sorted(r["n"] for r in out.collect()) == [1, 2]
+
+
 def test_distinct_on_keep_last(spark):
     df = spark.createDataFrame(
         [("a", 1, "x"), ("a", 2, "y"), ("b", 5, "z")], "k string, o int, p string"
