@@ -416,10 +416,10 @@ def main() -> None:
             # MID-pass is invisible to the point-in-time pass probe (final
             # run 4: clean 0.032 pass probe, then q01 at 6.5× baseline).
             # The per-query readings bracket every timed loop; re-run
-            # queries whose adjacent readings exceeded 2× the session's
-            # best reading — unless the whole pass was already re-run by
-            # the sweep above. min() keeps honest larger times; everything
-            # recorded.
+            # queries whose adjacent readings exceeded 3× the session's
+            # best reading (_burst_suspects' tol) — unless the whole pass
+            # was already re-run by the sweep above. min() keeps honest
+            # larger times; everything recorded.
             all_readings = (
                 [probes["pass_sf0.1"], probes["pass_sf1"]]
                 + [pr["probe_at_rerun"] for pr in pass_reruns]

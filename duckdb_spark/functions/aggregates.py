@@ -368,11 +368,13 @@ def _fold_guard(vals, result: Column) -> Column:
     return F.when(ok.isNull(), result)
 
 
-def welford_sq_fold(vals, field: str) -> Column:
+def welford_sq_fold(vals, field: str, other: str) -> Column:
     """count * var_pop over `field` of a position-sorted struct array —
     DuckDB's regr_sxx/regr_syy (extension/core_functions/aggregate/
     regression/regr_sxx_syy.cpp; update formula STDDevBaseOperation in
-    algebraic/stddev.hpp), replayed operation-for-operation."""
+    algebraic/stddev.hpp), replayed operation-for-operation. `other` is
+    the aggregate's second operand: like every regr_* aggregate it skips
+    a row where either operand is NULL."""
     vals = _c(vals)
     init = F.struct(
         F.lit(0.0).alias("n"), F.lit(0.0).alias("mean"), F.lit(0.0).alias("dsq")
@@ -384,10 +386,11 @@ def welford_sq_fold(vals, field: str) -> Column:
         md = (inp - s["mean"]) / n
         nm = s["mean"] + md
         inc = (inp - nm) * (inp - s["mean"])
-        # NULL skip (ADVICE r12): DuckDB's regr_sxx/syy skip NULL rows;
-        # propagating one through the accumulator NULLed the whole group.
+        # NULL skip: DuckDB's regr_sxx/syy skip rows where either operand
+        # is NULL; propagating one through the accumulator NULLed the
+        # whole group.
         return F.when(
-            inp.isNotNull(),
+            inp.isNotNull() & e[other].isNotNull(),
             F.struct(n.alias("n"), nm.alias("mean"), (s["dsq"] + inc).alias("dsq")),
         ).otherwise(s)
 

@@ -9,7 +9,8 @@ parallel writes (the reference's per-thread batching).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def copy_to(
@@ -21,7 +22,12 @@ def copy_to(
     overwrite: bool = True,
     max_records_per_file: int | None = None,
     header: bool = True,
-) -> None:
+) -> int:
+    """Write `df` to `path` and return the number of rows written. The
+    count is observed by the write job itself (a Spark `Observation`), as
+    the reference's sink counts the rows it consumes: no second query."""
+    written = Observation()
+    df = df.observe(written, F.count(F.lit(1)).alias("n"))
     writer = df.write.mode("overwrite" if overwrite else "error")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -34,7 +40,6 @@ def copy_to(
         # CSV can't hold nested columns; DuckDB writes their varchar
         # rendering (reference physical_copy_to_file.cpp casts to text).
         # Correctness path, not a bulk sink — the bulk format is parquet.
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         nested = {f.name: f.dataType for f in df.schema.fields
@@ -78,6 +83,7 @@ def copy_to(
         writer.parquet(path)
     else:
         raise ValueError(f"unsupported COPY TO format: {format}")
+    return written.get["n"]
 
 
 def export_database(

@@ -542,15 +542,18 @@ class ManagedTables:
                 alias: str | None = None, append: bool = False):
         """End of every DML statement. `tagged` holds the table's columns
         plus HIT and KEEP (operators/dml.py); the kept rows are written as
-        an append for INSERT, as a new version for the rest. The affected
-        count is observed on the hit rows by the write itself. RETURNING
-        rows are collected from the hit rows of the persisted frame before
-        the write, so that they are the rows stored, and so that a plan
+        an append for INSERT, as a new version for the rest.
+
+        The result is Arrow-local (relation.local_frame): fetching it runs
+        no Spark job. The affected count is observed on the hit rows by
+        the write itself, not by a second query. RETURNING rows are taken
+        as Arrow from the hit rows of the persisted frame before the
+        write, so that they are the rows stored, and so that a plan
         reading the table it changes (INSERT INTO t SELECT … FROM t) sees
         it unchanged."""
         from pyspark.sql import Observation
 
-        from duckdb_spark.relation import Relation
+        from duckdb_spark.relation import Relation, local_frame
 
         if ret:
             tagged = tagged.persist()
@@ -558,7 +561,7 @@ class ManagedTables:
                 .createOrReplaceTempView("__managed_returning")
             r = con.sql(f"SELECT {ret} FROM __managed_returning "
                         f"AS {alias or name}").df()
-            out = Relation(self.spark.createDataFrame(r.collect(), r.schema))
+            out = Relation(local_frame(self.spark, r.toArrow(), r.schema))
         else:
             hits = Observation()
             tagged = tagged.observe(hits, F.count_if(F.col(HIT)).alias("n"))
@@ -573,5 +576,5 @@ class ManagedTables:
         if ret:
             tagged.unpersist()
             return out
-        return Relation(self.spark.createDataFrame([(hits.get["n"],)],
-                                                   "Count: bigint"))
+        return Relation(local_frame(self.spark, [(hits.get["n"],)],
+                                    "Count: bigint"))

@@ -519,9 +519,9 @@ def fn_wave2_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "n_name", "md", "hist", "ent", "bits",
-            F.round(A.welford_sq_fold(F.col("__vals"), "x"), 2).alias("sxx"),
+            F.round(A.welford_sq_fold(F.col("__vals"), "x", "y"), 2).alias("sxx"),
             F.round(A.covar_sxy_fold(F.col("__vals")), 2).alias("sxy"),
-            F.round(A.welford_sq_fold(F.col("__vals"), "y"), 2).alias("syy"),
+            F.round(A.welford_sq_fold(F.col("__vals"), "y", "x"), 2).alias("syy"),
             # arg_max via the fold too: max_by ties are arbitrary in Spark,
             # DuckDB keeps the first scan-order max (strict-greater update)
             A.arg_max_fold(F.col("__vals"), "a", "y").alias("amax"),

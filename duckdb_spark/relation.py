@@ -17,8 +17,9 @@ from __future__ import annotations
 import re
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from duckdb_spark.catalog import DEFAULT_SF_DIR, register_views
 from duckdb_spark.session import get_spark
@@ -71,6 +72,23 @@ def _split_top_level(s: str) -> list[str]:
             start = i + 1
     parts.append(s[start:])
     return [p.strip() for p in parts if p.strip()]
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """A frame over rows the driver already holds: a DML or COPY count,
+    DESCRIBE's schema rows, a RETURNING snapshot. `rows` is a list of
+    tuples or a `pyarrow.Table`; either way it reaches the JVM as Arrow
+    and is planned as a LocalTableScan, so collecting the frame runs no
+    Spark job and no Python worker (over a Python list, createDataFrame
+    plans an RDD scan: one job of Python tasks per fetch)."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+        rows = pa.table([pa.array(c) for c in cols], names=schema.names)
+    return spark.createDataFrame(rows, schema)
 
 
 class Relation:
@@ -411,10 +429,8 @@ class Connection:
             hm2 = re.search(r"(?i)\bHEADER\s+'?(\w+)'?", opts)
             hdr = (hm2.group(1).lower() in ("1", "true", "on")
                    if hm2 else True)
-            n = df.count()
-            copy_to(df, path, format=fmt, partition_by=part, header=hdr)
-            return Relation(self.spark.createDataFrame(
-                [(n,)], "Count: bigint"))
+            n = copy_to(df, path, format=fmt, partition_by=part, header=hdr)
+            return Relation(local_frame(self.spark, [(n,)], "Count: bigint"))
         # COPY <table> FROM 'path' [(opts)] — import side of COPY
         # (reference physical_copy_to_file.cpp's read counterpart): load
         # by format and INSERT into the managed table; string-rendered
@@ -456,7 +472,9 @@ class Connection:
                 src = self.spark.read.parquet(path)
             Connection._tvf_seq += 1
             view = f"__copy_from_{Connection._tvf_seq}"
-            src.createOrReplaceTempView(view)
+            read = Observation()
+            src.observe(read, F.count(F.lit(1)).alias("n")) \
+                .createOrReplaceTempView(view)
             from duckdb_spark.types import spark_type_to_duckdb
 
             sel = ", ".join(
@@ -464,10 +482,13 @@ class Connection:
                 f"AS \"{f.name}\""
                 for s, f in zip(src.columns, target.fields)
             )
-            n = src.count()
-            self.sql(f"INSERT INTO \"{name}\" SELECT {sel} FROM {view}")
-            return Relation(self.spark.createDataFrame(
-                [(n,)], "Count: bigint"))
+            out = self.sql(f"INSERT INTO \"{name}\" SELECT {sel} FROM {view}")
+            # a managed table's INSERT returns the count its write observed;
+            # a Spark table's returns no rows: count what the insert read
+            if out is not None and out.columns == ["Count"]:
+                return out
+            return Relation(local_frame(
+                self.spark, [(read.get["n"],)], "Count: bigint"))
         # DESCRIBE / SUMMARIZE of a CTE in FROM position:
         # `WITH c AS (...) FROM (DESCRIBE TABLE c)` (cte_describe.test)
         m = re.match(
@@ -533,8 +554,8 @@ class Connection:
                  "YES" if f.nullable else "NO", None, None, None)
                 for f in df.schema.fields
             ]
-            return Relation(self.spark.createDataFrame(
-                rows,
+            return Relation(local_frame(
+                self.spark, rows,
                 "column_name string, column_type string, `null` string, "
                 "key string, `default` string, extra string",
             ))
@@ -934,8 +955,6 @@ class Connection:
                         df = df.distinct()
                 elif op.endswith("BY NAME"):
                     # EXCEPT/INTERSECT BY NAME: align rhs to lhs by name
-                    from pyspark.sql import functions as F
-
                     rl = {c.lower(): c for c in rhs.columns}
                     rhs2 = rhs.select(*[
                         rhs[rl[c.lower()]].alias(c) if c.lower() in rl
@@ -2392,7 +2411,7 @@ class Connection:
                             else f"{k} bigint" if isinstance(v, int)
                             else f"{k} string"
                             for k, v in info.items())
-                        df = self.spark.createDataFrame([row], schema)
+                        df = local_frame(self.spark, [row], schema)
                     elif name == "read_text":
                         df = readers.read_text(self.spark, paths)
                     elif name == "read_blob":
@@ -2569,8 +2588,6 @@ class Connection:
                 combined.append(tuple(row) + tuple(irow))
         if res_schema is None:
             return None
-        from pyspark.sql import types as T
-
         schema = T.StructType(
             list(outer_df.schema.fields) + list(res_schema.fields))
         out_df = self.spark.createDataFrame(combined, schema)

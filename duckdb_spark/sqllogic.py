@@ -817,9 +817,9 @@ class SLSession:
         return self._execute_one(stmts[0] if stmts else sql)
 
     def _count_result(self, n: int):
-        from duckdb_spark.relation import Relation
+        from duckdb_spark.relation import Relation, local_frame
 
-        return Relation(self.spark.createDataFrame([(n,)], "Count: bigint"))
+        return Relation(local_frame(self.spark, [(n,)], "Count: bigint"))
 
     def _execute_one(self, sql: str):
         sql = sql.strip().rstrip(";")

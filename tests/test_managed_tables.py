@@ -9,6 +9,7 @@ results stay correct across interleaved mutations and reads.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
 import duckdb_spark
 
@@ -307,3 +308,103 @@ def test_merge_conditional_insert_and_insert_star(con):
         (1, "a"), (2, "B"), (3, "c"), (4, "D"), (5, "e")]
     con.sql("DROP TABLE mi_t")
     con.sql("DROP TABLE mi_s")
+
+
+def _fetch_counting_jobs(spark, rel, group):
+    """rel.fetchall() under its own job group; returns the rows and the
+    number of Spark jobs the fetch started (counted after the listener
+    bus has delivered every event)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "fetch of a statement result")
+    try:
+        rows = rel.fetchall()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_results_are_job_free_and_match_duckdb(con, spark, tmp_path):
+    """UPDATE, DELETE, MERGE, COPY TO and COPY FROM return their count as
+    a local frame: fetching it starts no Spark job. The counts are DuckDB's,
+    including 0 for a DELETE on an empty table and for COPY of an empty
+    SELECT. A PARTITION_BY COPY counts the rows it wrote (DuckDB 1.0
+    reports 0 there), checked by reading its files back."""
+    import duckdb
+
+    names = {"t": "jf_t", "s": "jf_s"}
+    duck = duckdb.connect()
+    for stmt in _MIRROR_SETUP:
+        con.sql(stmt.format(**names))
+        duck.execute(stmt.format(**names))
+
+    def count(stmt, **paths):
+        got, jobs = _fetch_counting_jobs(
+            spark, con.sql(stmt.format(**names, **paths)), stmt)
+        assert jobs == 0, stmt
+        return [tuple(r) for r in got]
+
+    for i, stmt in enumerate([
+        "UPDATE {t} SET n = n + 1 WHERE k >= 3",
+        "DELETE FROM {t} WHERE k = 1",
+        "COPY (SELECT * FROM {t}) TO '{p}/all.parquet'",
+        "COPY (SELECT * FROM {t} WHERE k < 0) TO '{p}/none.parquet'",
+    ]):
+        (tmp_path / f"duck{i}").mkdir()
+        want = duck.execute(
+            stmt.format(**names, p=tmp_path / f"duck{i}")).fetchall()
+        assert count(stmt, p=tmp_path / f"spark{i}") == want, stmt
+    assert want == [(0,)]
+    stmt = "COPY {t} FROM '{p}/all.parquet'"  # each engine's own file
+    assert count(stmt, p=tmp_path / "spark2") == duck.execute(
+        stmt.format(**names, p=tmp_path / "duck2")).fetchall() == [(4,)]
+    got = count("COPY (SELECT k, v FROM {t}) TO '{p}/parts' "
+                "(FORMAT csv, PARTITION_BY (v))", p=tmp_path)
+    assert got == duck.execute(
+        f"SELECT count(*) FROM read_csv('{tmp_path}/parts/*/*.csv')"
+    ).fetchall() == [(8,)]
+    for stmt in ["DELETE FROM {t}"] * 2:
+        want = duck.execute(stmt.format(**names)).fetchall()
+        assert count(stmt) == want, stmt
+    assert want == [(0,)]
+    assert count("MERGE INTO {t} USING {s} AS src ON {t}.k = src.k "
+                 "WHEN NOT MATCHED THEN INSERT VALUES (src.k, 'm', src.w)"
+                 ) == [(3,)]
+    for name in names.values():
+        con.sql(f"DROP TABLE {name}")
+    duck.close()
+
+
+def test_returning_keeps_rows_and_dtypes(con):
+    """RETURNING rows round-trip through Arrow with the query's exact
+    Spark types (decimal, timestamp, list, struct) and DuckDB's values."""
+    import duckdb
+
+    duck = duckdb.connect()
+    stmts = [
+        "CREATE TABLE rt_t (k INTEGER, d DECIMAL(10,2), ts TIMESTAMP, "
+        "l INTEGER[], s STRUCT(a INTEGER, b VARCHAR))",
+        "INSERT INTO rt_t VALUES (1, 2.50, TIMESTAMP '2020-01-02 "
+        "03:04:05.123456', [1, 2, NULL], {'a': 1, 'b': 'x'}), "
+        "(2, NULL, NULL, [], NULL), (3, -7.25, TIMESTAMP '1999-12-31 "
+        "23:59:59', NULL, {'a': NULL, 'b': 'z'})",
+    ]
+    for stmt in stmts:
+        con.sql(stmt)
+        duck.execute(stmt)
+    table = con.sql("SELECT * FROM rt_t").df().schema
+
+    def plain(v):
+        return v.asDict() if hasattr(v, "asDict") else v
+
+    for stmt, cols in [
+        ("UPDATE rt_t SET d = d * 2 WHERE k >= 2 RETURNING *", table.names),
+        ("DELETE FROM rt_t WHERE k = 1 RETURNING s, l, ts, d",
+         ["s", "l", "ts", "d"]),
+    ]:
+        got = con.sql(stmt).df()
+        assert got.schema == T.StructType([table[c] for c in cols]), stmt
+        rows = [tuple(plain(v) for v in r) for r in got.collect()]
+        assert _sorted_rows(rows) == _sorted_rows(duck.execute(stmt).fetchall())
+    con.sql("DROP TABLE rt_t")
+    duck.close()

@@ -192,3 +192,33 @@ def test_csv_rejects_and_sniffer_depth(spark, tmp_path):
     import duckdb
     got = duckdb.sql("SELECT Delimiter, HasHeader FROM sniff_csv('" + p2 + "')").fetchone()
     assert (sn2["Delimiter"], sn2["HasHeader"]) == got
+
+
+def test_load_tables_from_threads_keeps_tables_cache_and_job_group(spark):
+    """catalog.load_tables opens the uncached tables from a thread pool:
+    each table is what a plain parquet read gives (events.ts normalized
+    to TIMESTAMP), later calls are served from the cache, and every
+    schema-inference job runs in the caller's job group."""
+    from duckdb_spark import catalog
+    from tests.conftest import SF_DIR as sf_dir
+
+    for name in catalog.ALL_TABLES:
+        catalog._TABLE_CACHE.pop((id(spark), sf_dir, name), None)
+    sc = spark.sparkContext
+    sc.setJobGroup("load-tables", "catalog.load_tables from threads")
+    try:
+        tables = catalog.load_tables(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("load-tables")) >= \
+        len(catalog.ALL_TABLES)
+    for name, df in tables.items():
+        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        if name == "events":
+            assert df.schema["ts"].dataType == T.TimestampType()
+            raw = T.StructType([f for f in raw if f.name != "ts"])
+            assert T.StructType([f for f in df.schema if f.name != "ts"]) == raw
+        else:
+            assert df.schema == raw, name
+        assert catalog.load_table(spark, sf_dir, name) is df

@@ -172,9 +172,9 @@ def test_regr_folds_bit_identical_to_duckdb(spark):
         .agg(vals.alias("v"))
         .select(
             "n_name",
-            welford_sq_fold(F.col("v"), "x").alias("sxx"),
+            welford_sq_fold(F.col("v"), "x", "y").alias("sxx"),
             covar_sxy_fold(F.col("v")).alias("sxy"),
-            welford_sq_fold(F.col("v"), "y").alias("syy"),
+            welford_sq_fold(F.col("v"), "y", "x").alias("syy"),
         )
         .collect()
     }
@@ -194,6 +194,34 @@ def test_regr_folds_bit_identical_to_duckdb(spark):
         ).fetchall()
     }
     assert got == exp  # exact float equality — bit-identity is the contract
+
+
+def test_regr_sxx_syy_folds_skip_rows_with_either_operand_null(spark):
+    """regr_sxx(y, x) / regr_syy(y, x) are binary aggregates: a row whose
+    OTHER operand is NULL is skipped too, e.g. (y=NULL, x=7) does not
+    enter sxx (8.0; counting it gives 18.67)."""
+    import duckdb
+
+    from pyspark.sql import functions as F
+
+    from duckdb_spark.functions.aggregates import welford_sq_fold
+
+    pairs = [(0, 1.0, 1.0), (1, 2.0, None), (2, 3.0, 5.0), (3, None, 7.0)]
+    got = (
+        spark.createDataFrame(pairs, "pos int, y double, x double")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "x", "y"))).alias("v"))
+        .select(
+            welford_sq_fold(F.col("v"), "x", "y").alias("sxx"),
+            welford_sq_fold(F.col("v"), "y", "x").alias("syy"),
+        )
+        .collect()[0]
+    )
+    exp = duckdb.connect().execute(
+        "SELECT regr_sxx(y, x), regr_syy(y, x) FROM (VALUES "
+        "(1.0, 1.0), (2.0, NULL), (3.0, 5.0), (NULL, 7.0)) t(y, x)"
+    ).fetchone()
+    assert exp == (8.0, 2.0)
+    assert (got.sxx, got.syy) == exp
 
 
 def test_arg_max_fold_first_scan_order_max_wins(spark):
